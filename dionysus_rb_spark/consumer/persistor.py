@@ -35,6 +35,13 @@ class EntitySink:
 
 @dataclass
 class PersistResult:
+    """What one ``persist_batch`` call offered to its sinks.
+
+    ``persisted`` counts, per entity, the rows *offered* to that
+    entity's MERGE (before keep-latest and the F1 guard), not the rows
+    it applied. ``dead_letter_count`` counts the rows sent to the
+    dead-letter store. Both come from one grouped count job."""
+
     persisted: dict[str, int] = field(default_factory=dict)
     dead_letter_count: int = 0
 
@@ -54,10 +61,13 @@ def persist_batch(
     envelope JSON (Kafka-shaped; NULL value = tombstone). Unknown event
     names go to the dead-letter store (T9, F4).
 
-    ``reconcile_children`` applies J4 after each has_many upsert: a
+    ``reconcile_children`` applies J4 to each has_many child entity: a
     parent's aggregate payload is authoritative for its child set, so
     stored children of the batch's parents that the payload no longer
-    lists are deleted (persistor.rb:128-151's ``where.not(id: ids)``)."""
+    lists are deleted (persistor.rb:128-151's ``where.not(id: ids)``).
+    The deletion happens inside the child's one MERGE (see
+    ``SnapshotStore.merge``'s ``parent_col``), so every entity sink is
+    merged exactly once per batch."""
     cfg = cfg or DeserializerConfig()
     result = PersistResult()
 
@@ -71,21 +81,6 @@ def persist_batch(
         known, unknown = dispatch_events(
             decoded.filter(F.col("record").isNotNull()), "__action"
         )
-        if dead_letter_store is not None:
-            # T9/F4 dead letters: unknown event names, plus payloads the
-            # envelope parser rejected (non-null value, nothing decoded)
-            dl = unknown.filter(F.col("event").isNotNull()).select("event", "value")
-            corrupt = decoded.filter(
-                F.col("record").isNull()
-                & F.col("event").isNull()
-                & F.col("value").isNotNull()
-            ).select("event", "value")
-            dl = dl.unionByName(corrupt)
-            n = dl.count()
-            if n:
-                dead_letter_store.append(spark, dl)
-            result.dead_letter_count = n
-
         # root frame: canonical columns + the event action driving the
         # created/updated/destroyed MERGE branches
         sideloads = set(_sideload_fields(snapshot_schema))
@@ -116,22 +111,10 @@ def persist_batch(
                 .drop("__tomb_id")
             )
             root = root.unionByName(tomb_root, allowMissingColumns=True)
-        # persisted-row bookkeeping: every merged frame contributes one
-        # (entity) tag frame; ONE groupBy-count job at the end replaces
-        # the old per-entity .count() jobs (VERDICT r4 "What's wrong"
-        # #2). The frames re-scan the CACHED decoded batch, so the tally
-        # is one cheap job per micro-batch, not one per entity.
-        # (DataFrame.observe on the merge write would be zero extra
-        # jobs, but observed metrics reliably fire only for batch
-        # actions — inside foreachBatch a join plan's metrics never
-        # arrive and Observation.get blocks the micro-batch thread.)
-        tallies: list[DataFrame] = []
+        # the frames to MERGE, in order: (entity, frame, J4 parent column)
+        merges: list[tuple[str, DataFrame, str | None]] = []
         if entity in sinks:
-            sinks[entity].store.merge(spark, root)
-            tallies.append(root.select(F.lit(entity).alias("__entity")))
-
-        # children: upserts, then J4 reconciliation for has_many (the
-        # parent payload is authoritative for its child id set)
+            merges.append((entity, root, None))
         for ent in deserialize(
             known, snapshot_schema, entity, cfg, polymorphic_types=polymorphic_types
         ):
@@ -140,32 +123,43 @@ def persist_batch(
             frame = ent.frame.withColumn("event", F.lit("updated")).withColumnRenamed(
                 "__parent_id", "synced_parent_id"
             )
-            store = sinks[ent.entity].store
-            store.merge(spark, frame)
-            tallies.append(frame.select(F.lit(ent.entity).alias("__entity")))
-            if reconcile_children and ent.relationship == "has_many":
-                current = store.read(spark)
-                if current is not None and "synced_parent_id" in current.columns:
-                    parents = frame.select("synced_parent_id").distinct()
-                    payload_ids = frame.select("synced_parent_id", cfg.synced_id)
-                    stale = current.join(
-                        F.broadcast(parents), "synced_parent_id", "left_semi"
-                    ).join(
-                        payload_ids, ["synced_parent_id", cfg.synced_id], "left_anti"
-                    )
-                    if stale.limit(1).count():
-                        store.merge(
-                            spark, stale.withColumn("event", F.lit("destroyed"))
-                        )
+            j4 = reconcile_children and ent.relationship == "has_many"
+            merges.append((ent.entity, frame, "synced_parent_id" if j4 else None))
 
-        if tallies:
-            tally = tallies[0]
-            for t in tallies[1:]:
+        # ONE grouped count tallies every merged frame (tagged with its
+        # entity) and the dead letters (tagged NULL). It runs first, so it
+        # also fills the decoded cache the merges re-scan. (DataFrame.
+        # observe on the merge writes would be zero extra jobs, but
+        # observed metrics reliably fire only for batch actions: inside
+        # foreachBatch a join plan's metrics never arrive and
+        # Observation.get blocks the micro-batch thread.)
+        tags = [f.select(F.lit(name).alias("__entity")) for name, f, _ in merges]
+        dl = None
+        if dead_letter_store is not None:
+            # T9/F4 dead letters: unknown event names, plus payloads the
+            # envelope parser rejected (non-null value, nothing decoded)
+            dl = unknown.filter(F.col("event").isNotNull()).select("event", "value")
+            corrupt = decoded.filter(
+                F.col("record").isNull()
+                & F.col("event").isNull()
+                & F.col("value").isNotNull()
+            ).select("event", "value")
+            dl = dl.unionByName(corrupt)
+            tags.append(dl.select(F.lit(None).cast("string").alias("__entity")))
+        if tags:
+            tally = tags[0]
+            for t in tags[1:]:
                 tally = tally.unionByName(t)
             for r in tally.groupBy("__entity").count().collect():
-                result.persisted[r["__entity"]] = result.persisted.get(
-                    r["__entity"], 0
-                ) + int(r["count"])
+                if r["__entity"] is None:
+                    result.dead_letter_count = int(r["count"])
+                else:
+                    result.persisted[r["__entity"]] = int(r["count"])
+
+        if result.dead_letter_count:
+            dead_letter_store.append(spark, dl)
+        for name, frame, parent_col in merges:
+            sinks[name].store.merge(spark, frame, parent_col=parent_col)
     finally:
         decoded.unpersist()
     return result

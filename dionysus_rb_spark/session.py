@@ -126,8 +126,13 @@ def get_spark(
     first-attempt task failures; the default matches plain local mode.
     ``extra_confs`` are applied at builder time (instrumentation only —
     bench.py's event-log attribution; never query semantics): they only
-    take effect when this call CREATES the session.
+    take effect when this call CREATES the session. A key that is also
+    in ``RUNTIME_CONFS`` raises ``ValueError``: the engine's semantics
+    depend on those values, so a caller may not override them.
     """
+    clash = sorted(set(extra_confs or ()) & set(RUNTIME_CONFS))
+    if clash:
+        raise ValueError(f"extra_confs may not override RUNTIME_CONFS: {clash}")
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = f"local[{cpus}]" if task_retries <= 1 else f"local[{cpus},{task_retries}]"

@@ -42,8 +42,9 @@ AUDITED_SITES = {
     # benchmark shingle set; three 1-row count frames; bloom (1 row) +
     # benchmark fingerprint set
     "plans/queries_text.py": 6,
-    # one micro-batch's parent ids (J4 reconciliation, inside foreachBatch)
-    "consumer/persistor.py": 1,
+    # one micro-batch's parents with the child ids it lists (J4
+    # reconciliation folded into the child MERGE, inside foreachBatch)
+    "streaming/snapshot_store.py": 1,
     # nation dimension (25 rows). j7's observer-id hint was dropped in
     # the round-5 second sweep: the id set derives from the full events
     # table (data-distribution-bounded, not by construction).

@@ -82,3 +82,12 @@ def test_runtime_confs_healed(hostile):
     for k, v in RUNTIME_CONFS.items():
         assert hostile.conf.get(k) == v, f"{k} not healed on external session"
     assert hostile.conf.get("spark.sql.shuffle.partitions") == "3"
+
+
+def test_extra_confs_cannot_override_runtime_confs():
+    from dionysus_rb_spark.session import get_spark
+
+    key = "spark.sql.session.timeZone"
+    assert key in RUNTIME_CONFS
+    with pytest.raises(ValueError, match=key):
+        get_spark(extra_confs={key: "America/New_York", "spark.ui.enabled": "false"})

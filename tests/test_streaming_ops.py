@@ -7,14 +7,15 @@ from __future__ import annotations
 import json
 
 import pyspark.sql.functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+import pytest
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from dionysus_rb_spark.consumer.persistor import EntitySink
 from dionysus_rb_spark.producer.genesis import genesis_scan, genesis_stream
 from dionysus_rb_spark.streaming.dedup_stream import consecutive_dedup_stream
 from dionysus_rb_spark.streaming.monitor import ProgressMonitor, windowed_latency_metrics
 from dionysus_rb_spark.streaming.pipeline import run_consumer_stream
-from dionysus_rb_spark.streaming.snapshot_store import SnapshotStore
+from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore, SnapshotStore
 
 
 def test_consecutive_dedup_stream_run_length(spark, tmp_path):
@@ -203,8 +204,6 @@ def test_genesis_roundtrip(spark, tmp_path):
 def test_bucketed_store_matches_plain_and_prunes(spark, tmp_path):
     """The bucketed store produces byte-identical state to the plain one
     while rewriting ONLY the buckets a batch touches."""
-    from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore
-
     plain = SnapshotStore(str(tmp_path / "plain"))
     bucketed = BucketedSnapshotStore(str(tmp_path / "bucketed"), num_buckets=8)
 
@@ -445,6 +444,162 @@ def test_multi_entity_persist_sideloads(spark, tmp_path):
     )
     items2 = {r["synced_id"]: r["qty"] for r in item_store.read(spark).collect()}
     assert items2 == {11: 5}
+
+
+ORDER = StructType(
+    [
+        StructField("id", LongType()),
+        StructField("updated_at", StringType()),
+        StructField(
+            "items",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("id", LongType()),
+                        StructField("updated_at", StringType()),
+                        StructField("canceled_at", StringType()),
+                        StructField("qty", LongType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+STORES = {
+    "plain": SnapshotStore,
+    "bucketed": lambda path: BucketedSnapshotStore(path, num_buckets=16),
+}
+
+
+def _order_batch(spark, events):
+    """One raw batch: each (event, order id, updated_at, items) is one
+    envelope; an item is (id, updated_at, canceled_at, qty)."""
+    return spark.createDataFrame(
+        [
+            (
+                json.dumps(
+                    {
+                        "message": [
+                            {
+                                "event": f"order_{ev}",
+                                "model_name": "Order",
+                                "data": [
+                                    {
+                                        "id": oid,
+                                        "updated_at": ts,
+                                        "items": [
+                                            dict(zip(("id", "updated_at", "canceled_at", "qty"), it))
+                                            for it in items
+                                        ],
+                                    }
+                                ],
+                            }
+                        ]
+                    }
+                ),
+            )
+            for ev, oid, ts, items in events
+        ],
+        "value STRING",
+    )
+
+
+def _rows(spark, store):
+    return {r["synced_id"]: r.asDict() for r in store.read(spark).collect()}
+
+
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_j4_folded_into_the_child_merge(spark, tmp_path, kind, monkeypatch):
+    """J4 runs inside the child entity's one MERGE: an unlisted child of
+    a listed parent is deleted unless it carries a canceled stamp, a
+    child that moved to another parent stays, a child listed by either
+    of a parent's two payloads in one batch stays, and replaying the
+    batch changes nothing. Every entity sink is merged once per batch."""
+    from dionysus_rb_spark.consumer.persistor import persist_batch
+
+    T1, T2, T3 = "2024-01-01 10:00:00", "2024-01-02 10:00:00", "2024-01-02 11:00:00"
+    orders = STORES[kind](str(tmp_path / "orders"))
+    items = STORES[kind](str(tmp_path / "items"))
+    sinks = {"order": EntitySink(orders), "item": EntitySink(items)}
+
+    def persist(events):
+        return persist_batch(spark, _order_batch(spark, events), ORDER, "order", sinks)
+
+    persist(
+        [
+            ("created", 1, T1, [(11, T1, None, 1), (12, T1, T1, 2), (13, T1, None, 3)]),
+            ("created", 2, T1, [(21, T1, None, 1)]),
+            ("created", 3, T1, [(31, T1, None, 1)]),
+            ("created", 4, T1, [(41, T1, None, 1), (42, T1, None, 1),
+                                (43, T1, None, 1), (44, T1, None, 1)]),
+        ]
+    )
+    before = _rows(spark, items)
+    assert set(before) == {11, 12, 13, 21, 31, 41, 42, 43, 44}
+
+    batch2 = [
+        # 12 (canceled) and 13 are no longer listed
+        ("updated", 1, T2, [(11, T2, None, 10)]),
+        # 31 moves from order 3 to order 2; order 3 now lists only 32
+        ("updated", 2, T2, [(21, T2, None, 1), (31, T2, None, 5)]),
+        ("updated", 3, T2, [(32, T2, None, 1)]),
+        # two payloads of order 4: a child either one lists survives
+        ("updated", 4, T2, [(41, T2, None, 2), (42, T2, None, 2)]),
+        ("updated", 4, T3, [(41, T3, None, 3), (43, T3, None, 3)]),
+    ]
+    if kind == "bucketed":
+        # the deleted child 13 sits in a bucket no key of the batch touches
+        keys = [it[0] for _, _, _, its in batch2 for it in its]
+        buckets = spark.createDataFrame([(k,) for k in keys + [13]], "synced_id LONG")
+        b = {
+            r["synced_id"]: r["b"]
+            for r in buckets.select("synced_id", items._bucket_expr().alias("b")).collect()
+        }
+        assert b[13] not in {b[k] for k in keys}
+
+    calls: dict[str, int] = {}
+    for name, store in (("order", orders), ("item", items)):
+        def counted(*a, _name=name, _merge=store.merge, **kw):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _merge(*a, **kw)
+
+        monkeypatch.setattr(store, "merge", counted)
+    res = persist(batch2)
+    assert calls == {"order": 1, "item": 1}
+    assert res.persisted == {"order": 5, "item": 8}
+
+    after = _rows(spark, items)
+    assert set(after) == {11, 12, 21, 31, 32, 41, 42, 43}
+    assert after[12] == before[12]  # canceled: kept verbatim
+    assert after[11]["qty"] == 10
+    assert after[31]["synced_parent_id"] == 2
+    assert (after[41]["qty"], after[42]["qty"], after[43]["qty"]) == (3, 2, 3)
+
+    persist(batch2)  # replay
+    assert _rows(spark, items) == after
+
+
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_j4_child_store_without_canceled_column(spark, tmp_path, kind):
+    """Without a canceled column every unlisted child of a listed parent
+    is deleted; children of other parents are untouched."""
+    from datetime import datetime
+
+    store = STORES[kind](str(tmp_path / "children"))
+    cols = "synced_parent_id LONG, synced_id LONG, synced_updated_at TIMESTAMP, val STRING"
+    t1, t2 = datetime(2024, 1, 1), datetime(2024, 1, 2)
+    store.overwrite(
+        spark.createDataFrame(
+            [(1, 11, t1, "a"), (1, 12, t1, "b"), (2, 21, t1, "c")], cols
+        )
+    )
+    store.merge(
+        spark,
+        spark.createDataFrame([(1, 11, t2, "a2", "updated")], cols + ", event STRING"),
+        parent_col="synced_parent_id",
+    )
+    assert {k: r["val"] for k, r in _rows(spark, store).items()} == {11: "a2", 21: "c"}
 
 
 def test_multi_topic_runner(spark, tmp_path):
