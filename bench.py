@@ -96,7 +96,11 @@ def _parse_event_log(
     sample named by ``min_idx`` (the one whose wall the headline
     reports), keyed off the ``q:<name>:<sample>`` job groups. Spark 4
     rolls the log into an eventlog_v2_<appId>/ directory of events_*
-    part files; older layouts use a flat file."""
+    part files; older layouts use a flat file.
+
+    Only successful task attempts count: a failed or killed attempt's
+    run time is work the query did not keep. A malformed job group
+    (wrong field count, non-integer sample) is skipped on its own."""
     v2dir = os.path.join(evdir, f"eventlog_v2_{app_id}")
     if os.path.isdir(v2dir):
         paths = [
@@ -117,15 +121,21 @@ def _parse_event_log(
                     grp = (ev.get("Properties") or {}).get(
                         "spark.jobGroup.id", ""
                     )
-                    if grp.startswith("q:"):
-                        _, qname, p = grp.split(":")
-                        key = (qname, int(p))
-                        for s in ev.get("Stage IDs", []):
-                            stage_key[s] = key
-                        if int(p) == min_idx.get(qname, -1):
-                            d = agg.setdefault(qname, {})
-                            d["jobs"] = d.get("jobs", 0) + 1
+                    parts = grp.split(":", 2)
+                    if parts[0] != "q" or len(parts) != 3:
+                        continue
+                    try:
+                        key = (parts[1], int(parts[2]))
+                    except ValueError:
+                        continue
+                    for s in ev.get("Stage IDs", []):
+                        stage_key[s] = key
+                    if key[1] == min_idx.get(key[0], -1):
+                        d = agg.setdefault(key[0], {})
+                        d["jobs"] = d.get("jobs", 0) + 1
                 elif e == "SparkListenerTaskEnd":
+                    if (ev.get("Task End Reason") or {}).get("Reason") != "Success":
+                        continue
                     key = stage_key.get(ev["Stage ID"])
                     if key is not None and key[1] == min_idx.get(key[0], -1):
                         m = ev.get("Task Metrics") or {}

@@ -55,19 +55,22 @@ def persist_batch(
     cfg: DeserializerConfig | None = None,
     polymorphic_types: dict[str, list[str]] | None = None,
     dead_letter_store: SnapshotStore | None = None,
-    reconcile_children: bool = True,
 ) -> PersistResult:
     """One micro-batch, end to end. ``raw`` carries a ``value`` column of
     envelope JSON (Kafka-shaped; NULL value = tombstone). Unknown event
     names go to the dead-letter store (T9, F4).
 
-    ``reconcile_children`` applies J4 to each has_many child entity: a
+    J4 always applies to every has_many child entity with a sink: a
     parent's aggregate payload is authoritative for its child set, so
     stored children of the batch's parents that the payload no longer
     lists are deleted (persistor.rb:128-151's ``where.not(id: ids)``).
     The deletion happens inside the child's one MERGE (see
     ``SnapshotStore.merge``'s ``parent_col``), so every entity sink is
-    merged exactly once per batch."""
+    merged exactly once per batch.
+
+    The first batch into an empty sink takes the same guarded MERGE as
+    every later one, against an empty table: a soft destroy of an unseen
+    key inserts the canceled row, a hard destroy of one does nothing."""
     cfg = cfg or DeserializerConfig()
     result = PersistResult()
 
@@ -123,7 +126,7 @@ def persist_batch(
             frame = ent.frame.withColumn("event", F.lit("updated")).withColumnRenamed(
                 "__parent_id", "synced_parent_id"
             )
-            j4 = reconcile_children and ent.relationship == "has_many"
+            j4 = ent.relationship == "has_many"
             merges.append((ent.entity, frame, "synced_parent_id" if j4 else None))
 
         # ONE grouped count tallies every merged frame (tagged with its

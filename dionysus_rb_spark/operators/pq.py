@@ -339,6 +339,7 @@ def pq_encode_sql(n_codes: int = 8, n_sub: int = 8, dim: int = 64) -> str:
 #   20,000    128        0.55 s      0.65 s    literal (0.86x)
 #   20,000    256        1.03 s      0.67 s    ARROW   (1.54x)
 #   200,000    64        1.89 s      1.23 s    ARROW   (1.54x)
+#   200,000   128        2.51 s      1.42 s    ARROW   (1.77x)
 #   200,000   256        5.54 s      0.98 s    ARROW   (5.65x)
 #
 # The demo-scale crossover sits between 128 and 256 — 256 kept the

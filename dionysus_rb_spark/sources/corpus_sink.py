@@ -42,7 +42,7 @@ silent read-back surprise. Partition-column TYPES round-trip via a
 each partition column back to its written DDL type, so a lang of
 ``'7'`` stays a string instead of being re-typed by Spark's default
 partition-column inference (which is a session-global conf the engine
-must not flip — the bucketed snapshot store relies on typed buckets).
+must not flip).
 
 Reference parity: the closest surface is the bulk-import sink
 (lib/dionysus/utils/ — set-oriented inserts, SURVEY §2 S8); the

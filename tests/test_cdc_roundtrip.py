@@ -14,7 +14,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 from dionysus_rb_spark.consumer.persistor import EntitySink
 from dionysus_rb_spark.registry import ProducerRegistry, PublicationDecl
 from dionysus_rb_spark.streaming.pipeline import run_consumer_stream
-from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore
+from dionysus_rb_spark.streaming.snapshot_store import SnapshotStore
 
 RENTAL = StructType(
     [
@@ -70,8 +70,8 @@ def test_cdc_full_roundtrip(spark, tmp_path):
     assert res.by_action == {"created": 4, "updated": 2, "destroyed": 2}
     out_dir = tmp_path / "topics" / "v3_rentals"
 
-    # --- consumer: stream the files in order into the bucketed store -----
-    store = BucketedSnapshotStore(str(tmp_path / "rentals_store"), num_buckets=4)
+    # --- consumer: stream the files in order into the snapshot store -----
+    store = SnapshotStore(str(tmp_path / "rentals_store"))
     q = run_consumer_stream(
         spark,
         str(out_dir),

@@ -13,8 +13,6 @@ Current sites, audited bounded:
 - producer/pipeline.py: one <=3-row action-count summary
 - consumer/persistor.py: per-entity persisted-count tally (rows =
   number of entities in one micro-batch's schema)
-- streaming/snapshot_store.py: distinct bucket ids touched by one
-  micro-batch (<= num_buckets)
 - operators/pq.py: seed vectors (n_codes), per-iteration codebook
   update (n_codes x n_sub), query vectors (len(query_ids)), IVF
   centroid seeds (n_centroids) -- all hyperparameter-scale; plus the
@@ -51,7 +49,6 @@ PKG = Path(__file__).resolve().parent.parent / "dionysus_rb_spark"
 AUDITED_SITES = {
     "producer/pipeline.py": 1,
     "consumer/persistor.py": 1,
-    "streaming/snapshot_store.py": 1,
     "operators/pq.py": 7,
     "operators/similarity.py": 1,
     "operators/clustering.py": 2,

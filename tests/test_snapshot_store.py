@@ -1,7 +1,8 @@
 """Snapshot store commit and read contracts: the schema recorded in the
 ``_CURRENT`` pointer matches what parquet inference would return, a read
-with it launches no Spark job, pointers without it still read, and
-version names come from a sequence, not the clock."""
+with it launches no Spark job, pointers without it still read, a pointer
+of the retired key-bucketed store is refused, and version names come
+from a sequence, not the clock."""
 
 from __future__ import annotations
 
@@ -10,9 +11,10 @@ import os
 from datetime import datetime
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore, SnapshotStore
+from dionysus_rb_spark.streaming.snapshot_store import SnapshotStore
 
 NESTED = (
     "synced_id LONG, synced_updated_at TIMESTAMP, "
@@ -111,12 +113,32 @@ def test_read_launches_no_job_with_a_recorded_schema(spark, tmp_path, recorded):
     assert (len(jobs) == 0) == recorded, jobs
 
 
-def test_bucketed_manifest_records_the_schema(spark, tmp_path):
-    store = BucketedSnapshotStore(str(tmp_path / "b"), num_buckets=4)
-    store.overwrite(_nested(spark))
-    paths = [os.path.join(store.path, p) for p in store._manifest().values()]
-    assert _recorded(store) == spark.read.parquet(*paths).schema
-    assert store.read(spark).schema == _recorded(store)
+def test_legacy_bucketed_pointer_is_refused(spark, tmp_path):
+    """A ``_CURRENT`` holding a ``buckets`` manifest (written by the
+    retired key-bucketed store) is refused, not read as an empty store:
+    a merge would otherwise commit the batch alone over the stored rows.
+    The store is left as it was, and the migration the message names
+    reads every stored row."""
+    path = tmp_path / "b"
+    _nested(spark).withColumn("__bucket", F.col("synced_id") % 2).write.partitionBy(
+        "__bucket"
+    ).parquet(str(path / "v_0000000001_1"))
+    manifest = {"0": "v_0000000001_1/__bucket=0", "1": "v_0000000001_1/__bucket=1"}
+    pointer = {"buckets": manifest, "seq": 1, "schema": _nested(spark).schema.jsonValue()}
+    (path / "_CURRENT").write_text(json.dumps(pointer))
+    store = SnapshotStore(str(path))
+    batch = _nested(spark).limit(1).withColumn("event", F.lit("updated"))
+    for op in (lambda: store.read(spark), lambda: store.merge(spark, batch)):
+        with pytest.raises(ValueError, match=r"key-bucketed.*SnapshotStore\(new_path\)"):
+            op()
+    assert json.loads((path / "_CURRENT").read_text()) == pointer
+    assert _versions(store) == ["v_0000000001_1"]
+
+    migrated = SnapshotStore(str(tmp_path / "migrated"))
+    migrated.overwrite(spark.read.parquet(*[str(path / d) for d in manifest.values()]))
+    assert sorted(map(str, migrated.read(spark).collect())) == sorted(
+        map(str, _nested(spark).collect())
+    )
 
 
 def test_commits_in_one_clock_tick_get_their_own_versions(spark, tmp_path, monkeypatch):

@@ -15,7 +15,7 @@ from dionysus_rb_spark.producer.genesis import genesis_scan, genesis_stream
 from dionysus_rb_spark.streaming.dedup_stream import consecutive_dedup_stream
 from dionysus_rb_spark.streaming.monitor import ProgressMonitor, windowed_latency_metrics
 from dionysus_rb_spark.streaming.pipeline import run_consumer_stream
-from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore, SnapshotStore
+from dionysus_rb_spark.streaming.snapshot_store import SnapshotStore
 
 
 def test_consecutive_dedup_stream_run_length(spark, tmp_path):
@@ -199,80 +199,6 @@ def test_genesis_roundtrip(spark, tmp_path):
     # T10: the monitor saw every genesis batch
     assert mon.total_input_rows() == 20
     assert not mon.stale(600)
-
-
-def test_bucketed_store_matches_plain_and_prunes(spark, tmp_path):
-    """The bucketed store produces byte-identical state to the plain one
-    while rewriting ONLY the buckets a batch touches."""
-    plain = SnapshotStore(str(tmp_path / "plain"))
-    bucketed = BucketedSnapshotStore(str(tmp_path / "bucketed"), num_buckets=8)
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows,
-            "synced_id LONG, synced_updated_at TIMESTAMP, val DOUBLE, "
-            "synced_canceled_at TIMESTAMP, event STRING",
-        )
-
-    from datetime import datetime
-
-    b1 = batch(
-        [(i, datetime(2024, 1, 1, 10), float(i), None, "created") for i in range(1, 21)]
-    )
-    for s in (plain, bucketed):
-        s.merge(spark, b1)
-    manifest_before = dict(bucketed._manifest())
-
-    # second batch: update key 5, destroy key 6 (hard), insert key 100
-    b2 = batch(
-        [
-            (5, datetime(2024, 1, 2, 10), 55.0, None, "updated"),
-            (6, datetime(2024, 1, 2, 10), None, None, "destroyed"),
-            (100, datetime(2024, 1, 2, 10), 100.0, None, "created"),
-        ]
-    )
-    for s in (plain, bucketed):
-        s.merge(spark, b2)
-
-    def state(s):
-        return {
-            r["synced_id"]: (r["synced_updated_at"], r["val"])
-            for r in s.read(spark).collect()
-        }
-
-    assert state(plain) == state(bucketed)
-    assert len(state(bucketed)) == 20  # 20 - 1 destroyed + 1 inserted
-
-    # pruning: buckets untouched by batch 2 still point at their v1 files
-    manifest_after = bucketed._manifest()
-    touched = {
-        str(r["__b"])
-        for r in b2.select(bucketed._bucket_expr().alias("__b")).distinct().collect()
-    }
-    for b, path in manifest_before.items():
-        if b not in touched:
-            assert manifest_after[b] == path, f"untouched bucket {b} was rewritten"
-    assert any(manifest_after[b] != manifest_before.get(b) for b in touched)
-
-    # T1 idempotency on the bucketed path: replaying batch 2 is a no-op
-    bucketed.merge(spark, b2)
-    assert state(plain) == state(bucketed)
-
-    # GC: after several merges, unreferenced version dirs are bounded
-    import os
-
-    from datetime import datetime as _dt
-
-    for i in range(4):
-        bucketed.merge(
-            spark, batch([(5, _dt(2024, 1, 3 + i, 10), 60.0 + i, None, "updated")])
-        )
-    referenced = {p.split(os.sep, 1)[0] for p in bucketed._manifest().values()}
-    on_disk = {
-        d for d in os.listdir(bucketed.path)
-        if d.startswith("v") and os.path.isdir(os.path.join(bucketed.path, d))
-    }
-    assert len(on_disk - referenced) <= 2  # grace window only
 
 
 def test_hive_bucketed_target_skips_exchange(spark):
@@ -466,10 +392,7 @@ ORDER = StructType(
     ]
 )
 
-STORES = {
-    "plain": SnapshotStore,
-    "bucketed": lambda path: BucketedSnapshotStore(path, num_buckets=16),
-}
+STORES = {"plain": SnapshotStore}
 
 
 def _order_batch(spark, events):
@@ -548,15 +471,6 @@ def test_j4_folded_into_the_child_merge(spark, tmp_path, kind, monkeypatch):
         ("updated", 4, T2, [(41, T2, None, 2), (42, T2, None, 2)]),
         ("updated", 4, T3, [(41, T3, None, 3), (43, T3, None, 3)]),
     ]
-    if kind == "bucketed":
-        # the deleted child 13 sits in a bucket no key of the batch touches
-        keys = [it[0] for _, _, _, its in batch2 for it in its]
-        buckets = spark.createDataFrame([(k,) for k in keys + [13]], "synced_id LONG")
-        b = {
-            r["synced_id"]: r["b"]
-            for r in buckets.select("synced_id", items._bucket_expr().alias("b")).collect()
-        }
-        assert b[13] not in {b[k] for k in keys}
 
     calls: dict[str, int] = {}
     for name, store in (("order", orders), ("item", items)):
@@ -600,6 +514,74 @@ def test_j4_child_store_without_canceled_column(spark, tmp_path, kind):
         parent_col="synced_parent_id",
     )
     assert {k: r["val"] for k, r in _rows(spark, store).items()} == {11: "a2", 21: "c"}
+
+
+@pytest.mark.parametrize("seeded", [False, True], ids=["empty", "seeded"])
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_first_merge_takes_the_guarded_path(spark, tmp_path, kind, seeded):
+    """A store without a version merges its first batch into an empty
+    table through the same guarded MERGE as every later batch, so the
+    batch leaves the same rows as on a store holding an unrelated key:
+    a soft destroy of an unseen key inserts the canceled row, a hard
+    destroy of one does nothing, an unknown event is dropped (F8), and
+    keep-latest picks one row per key."""
+    from datetime import datetime
+
+    store = STORES[kind](str(tmp_path / "things"))
+    cols = "synced_id LONG, synced_updated_at TIMESTAMP, val LONG, synced_canceled_at TIMESTAMP"
+    t1, t2 = datetime(2024, 1, 1), datetime(2024, 1, 2)
+    if seeded:
+        store.overwrite(spark.createDataFrame([(99, t1, 0, None)], cols))
+    store.merge(
+        spark,
+        spark.createDataFrame(
+            [
+                (1, t1, 10, t1, "destroyed"),
+                (2, t2, 20, None, "view_happened"),
+                (3, t1, 30, None, "destroyed"),
+                (4, t1, 40, None, "created"),
+                (4, t2, 41, None, "updated"),
+            ],
+            cols + ", event STRING",
+        ),
+    )
+    got = {
+        k: (r["synced_updated_at"], r["val"], r["synced_canceled_at"])
+        for k, r in _rows(spark, store).items()
+        if k != 99
+    }
+    assert got == {1: (t1, 10, t1), 4: (t2, 41, None)}
+
+
+def test_first_persist_batch_keeps_a_soft_destroy(spark, tmp_path):
+    """The first ``persist_batch`` into an empty sink keeps a soft
+    destroy (``thing_destroyed`` with ``canceled_at``) as a canceled row,
+    as the reference's find_or_initialize + cancel + save does."""
+    from dionysus_rb_spark.consumer.persistor import persist_batch
+
+    schema = StructType(THING.fields + [StructField("canceled_at", StringType())])
+    store = SnapshotStore(str(tmp_path / "things"))
+
+    def env(event, **attrs):
+        return json.dumps(
+            {"message": [{"event": event, "model_name": "Thing", "data": [attrs]}]}
+        )
+
+    T1 = "2024-01-01 10:00:00"
+    batch = spark.createDataFrame(
+        [
+            (env("thing_destroyed", id=1, updated_at=T1, name="A", canceled_at=T1),),
+            (env("thing_destroyed", id=2, updated_at=T1, name="B"),),
+            (env("thing_created", id=3, updated_at=T1, name="C"),),
+        ],
+        "value STRING",
+    )
+    persist_batch(spark, batch, schema, "thing", {"thing": EntitySink(store)})
+    got = {
+        k: (r["name"], r["synced_canceled_at"] is not None)
+        for k, r in _rows(spark, store).items()
+    }
+    assert got == {1: ("A", True), 3: ("C", False)}
 
 
 def test_multi_topic_runner(spark, tmp_path):
