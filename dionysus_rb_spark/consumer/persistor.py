@@ -131,11 +131,11 @@ def persist_batch(
 
         # ONE grouped count tallies every merged frame (tagged with its
         # entity) and the dead letters (tagged NULL). It runs first, so it
-        # also fills the decoded cache the merges re-scan. (DataFrame.
-        # observe on the merge writes would be zero extra jobs, but
-        # observed metrics reliably fire only for batch actions: inside
-        # foreachBatch a join plan's metrics never arrive and
-        # Observation.get blocks the micro-batch thread.)
+        # also fills the decoded cache the merges re-scan, and a zero
+        # dead-letter count skips the dead-letter store's rewrite. An
+        # Observation on the commit writes does deliver inside
+        # foreachBatch on Spark 4.1.2 (ROADMAP "Measured at this
+        # re-anchor"); replacing this count with it is ROADMAP item 4.
         tags = [f.select(F.lit(name).alias("__entity")) for name, f, _ in merges]
         dl = None
         if dead_letter_store is not None:

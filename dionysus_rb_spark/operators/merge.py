@@ -56,7 +56,8 @@ def guarded_merge(
     """Return the post-merge state of ``target``.
 
     ``source`` rows carry the payload columns (same names as target's data
-    columns) plus ``event_col`` ∈ {created, updated, destroyed}; a
+    columns; a target column the payload lacks keeps its stored value and
+    is NULL on insert) plus ``event_col`` ∈ {created, updated, destroyed}; a
     tombstone is ``event = destroyed`` with all payload columns NULL —
     tombstones delete hard. Unknown event names are dropped (F8; the
     reference logs them to the error handler — streaming callers attach a
@@ -119,6 +120,11 @@ def guarded_merge(
         hard_delete = is_destroy
 
     def out_col(c: str):
+        if c not in source.columns:
+            # the payload does not carry c: a stored row keeps its value
+            # and an insert has none (the reference assigns only the
+            # payload's attributes, synchronizable_model.rb:32-37)
+            return F.when(src_only, F.lit(None)).otherwise(F.col(f"t.{c}")).alias(c)
         return (
             # guard-accepted events — soft destroys included — persist
             # the payload's attributes (assign_attributes_from_dionysus

@@ -288,10 +288,10 @@ def delta_dedup_gate(
     EXISTING corpus (``index``) without re-deduping the corpus.
 
     At 100 TB nobody re-runs whole-corpus dedup per arriving batch —
-    the corpus side becomes a PERSISTED band-key index table
-    ``(band_key, doc_id)`` bucketed on band_key (plus the shingle-set
-    store for verification), and each delta batch pays one
-    band-key join against it plus one verify join: cost is
+    the corpus side becomes a PERSISTED band-key index
+    ``(band_key, doc_id)`` (plus the shingle-set store for
+    verification; see :func:`build_dedup_index`), and each delta batch
+    pays one band-key join against it plus one verify join: cost is
     O(delta + matched buckets), never O(corpus). This operator is that
     gate with the index side computed inline (so the whole thing stays
     oracle-checkable on one table); the banding/verify semantics are
@@ -883,10 +883,8 @@ def build_dedup_index(
 
     At 100 TB: the corpus pays its shingle+signature cost once; each
     arriving delta pays one band-key join against the committed
-    segments plus a candidate-pruned verify scan. On a cluster the
-    bands relation belongs in a band_key-bucketed table so the gate
-    join co-locates without a shuffle; plain parquet (this function)
-    still confines the per-delta cost to one keyed shuffle per side.
+    segments plus a candidate-pruned verify scan, which confines the
+    per-delta cost to one keyed shuffle per side.
     """
     from contextlib import nullcontext
 
@@ -1536,192 +1534,6 @@ def delta_dedup_gate_indexed(
             exclude_self=exclude_self,
             overcap_keys=overcap,
         )
-    return GateDecision(decision, [sh_d, *pinned])
-
-
-def build_dedup_index_bucketed(
-    index: DataFrame,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    bands: int = BANDS,
-    seed: int = 42,
-    n_buckets: int = 64,
-) -> None:
-    """The CLUSTER storage shape the parquet index's docstring promises
-    (VERDICT r10 item 3): the corpus band rows live in a metastore
-    table BUCKETED (and sorted) on band_key, the shingle store in one
-    bucketed on index_id, so a gate's two joins CO-LOCATE against them
-    — the corpus side of each join needs NO exchange at any delivery
-    size, which is the one regime where the plain-parquet gate pays a
-    per-delivery corpus-side shuffle: a delivery too big for AQE to
-    broadcast. Trade-offs vs :func:`build_dedup_index` (which remains
-    the default): a metastore dependency, no crash-atomic append/
-    compaction story (table overwrite is the only mutation — rebuild
-    per corpus version), and ``n_buckets`` fixed at build time.
-
-    MEASURED verdict (SCALING.md r11): on a single host the parquet
-    gate WINS the too-big-to-broadcast A/B (0.93× at 10M corpus /
-    2.5M delta, interleaved same-session) — local-mode shuffles are
-    memory-local, so the network transfer co-location eliminates on a
-    real cluster is nearly free, while the fixed bucket-file layout's
-    scan costs are real. This shape is OPT-IN for the regime
-    single-host measurement cannot model: multi-rack clusters where
-    the corpus-side exchange is network-bound.
-
-    Three tables are written under ``table_prefix``:
-    ``<prefix>_bands(index_id, band_key)`` bucketed+sorted on band_key;
-    ``<prefix>_shingles(index_id, __sb)`` bucketed+sorted on index_id;
-    ``<prefix>_meta`` — one row pinning the signature constants and
-    bucket count (the same can-never-drift contract as the parquet
-    manifest).
-
-    Rebuilds are self-cleaning across METASTORE lifetimes: a fresh
-    session's catalog does not know tables a previous session left in
-    the warehouse directory, and saveAsTable refuses a managed
-    location that already exists — so each table is dropped AND its
-    stale DEFAULT-MANAGED location deleted before the write.
-    ``table_prefix`` must be an unqualified identifier
-    (``[A-Za-z0-9_]+`` — the prefix names warehouse directories, so a
-    db-qualified or quoted name would desynchronize the catalog drop
-    from the directory cleanup), and a cataloged table whose resolved
-    location is NOT the expected managed path (someone created a
-    custom-location table under this name) is dropped from the catalog
-    but its data directory is left untouched (ADVICE r11 item 4 — the
-    old unconditional delete could destroy an unrelated directory
-    sharing the name in the warehouse root)."""
-    from urllib.parse import urlparse as _urlparse
-
-    from ..sources.corpus_sink import _fs_delete
-
-    if not table_prefix or not all(
-        c.isalnum() or c == "_" for c in table_prefix
-    ):
-        raise ValueError(
-            "table_prefix must be an unqualified identifier "
-            f"([A-Za-z0-9_]+), got {table_prefix!r}"
-        )
-    spark = index.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    for suffix in ("_bands", "_shingles", "_meta"):
-        name = f"{table_prefix}{suffix}"
-        expected = f"{warehouse.rstrip('/')}/{name.lower()}"
-        location = None
-        cataloged = spark.catalog.tableExists(name)
-        if cataloged:
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect():
-                if r["col_name"] == "Location":
-                    location = r["data_type"]
-                    break
-            spark.sql(f"DROP TABLE {name}")
-        # delete the default managed directory only when it is (or, for
-        # a table this session's catalog never knew, would be) the
-        # dropped table's own data — a custom-location table's data is
-        # not ours to reclaim
-        managed_here = cataloged and location is not None and (
-            _urlparse(location).path.rstrip("/")
-            == _urlparse(expected).path.rstrip("/")
-        )
-        if not cataloged or managed_here:
-            _fs_delete(spark, expected)
-    sh_i = doc_shingles(index, text_col, id_col, k)
-    keys = band_keys_expr(bands, num_perm // bands)
-    signed = minhash_signature(sh_i, num_perm, seed)
-    (
-        signed.select(
-            F.col("doc_id").alias("index_id"),
-            F.explode(F.expr(keys)).alias("band_key"),
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band_key")
-        .sortBy("band_key")
-        .saveAsTable(f"{table_prefix}_bands")
-    )
-    (
-        sh_i.select(
-            F.col("doc_id").alias("index_id"),
-            F.col("shingle_set").alias("__sb"),
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "index_id")
-        .sortBy("index_id")
-        .saveAsTable(f"{table_prefix}_shingles")
-    )
-    meta = spark.createDataFrame(
-        [(k, num_perm, bands, seed, n_buckets)],
-        "k int, num_perm int, bands int, seed long, n_buckets int",
-    )
-    meta.write.mode("overwrite").saveAsTable(f"{table_prefix}_meta")
-
-
-def delta_dedup_gate_bucketed(
-    delta: DataFrame,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    max_bucket: int | None = 1000,
-) -> GateDecision:
-    """Gate a delta batch against a BUCKETED-table index
-    (:func:`build_dedup_index_bucketed`) — decision-identical to
-    :func:`delta_dedup_gate` / the parquet-index gate over the same
-    corpus (pinned by test), with the corpus side of BOTH joins
-    exchange-free: the band join reads ``<prefix>_bands`` in band_key
-    bucket order (only the delivery's band rows shuffle, to the
-    bucket count), the verify join reads ``<prefix>_shingles`` in
-    index_id bucket order, and the bucket-cap widths come from a
-    groupBy the band_key bucketing satisfies without an exchange.
-    Signature constants come from ``<prefix>_meta``."""
-    from pyspark.storagelevel import StorageLevel
-
-    spark = delta.sparkSession
-    meta = spark.table(f"{table_prefix}_meta").collect()
-    if len(meta) != 1:
-        raise ValueError(
-            f"bucketed dedup index {table_prefix!r}: expected exactly one "
-            f"_meta row, found {len(meta)}"
-        )
-    row = meta[0]
-    k, num_perm, bands, seed = (
-        row["k"],
-        row["num_perm"],
-        row["bands"],
-        row["seed"],
-    )
-    sh_d = doc_shingles(delta, text_col, id_col, k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keys = band_keys_expr(bands, num_perm // bands)
-    bd = minhash_signature(sh_d, num_perm, seed).select(
-        F.col("doc_id").alias("delta_id"),
-        F.explode(F.expr(keys)).alias("band_key"),
-    )
-    bi = spark.table(f"{table_prefix}_bands")
-    overcap = None
-    if max_bucket is not None:
-        # the groupBy's required distribution is satisfied by the
-        # table's band_key bucketing: width aggregation without an
-        # exchange, exact peer of the parquet index's width sidecars
-        overcap = (
-            bi.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("__w"))
-            .filter(F.col("__w") > max_bucket)
-            .select("band_key")
-        )
-    sb = spark.table(f"{table_prefix}_shingles")
-    decision, pinned = _gate_against(
-        delta,
-        id_col,
-        sh_d,
-        bd,
-        bi,
-        sb,
-        threshold,
-        max_bucket,
-        overcap_keys=overcap,
-    )
     return GateDecision(decision, [sh_d, *pinned])
 
 

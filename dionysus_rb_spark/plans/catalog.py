@@ -187,12 +187,10 @@ _PLAN_CHANGED: dict[str, int] = {
     # execution path), overwrite builds pick their epoch past every
     # on-disk segment, the streaming loop grew auto-compaction +
     # delivery accumulation (default path restructured around
-    # gate_input), and the bucketed build's table cleanup resolves
-    # catalog locations before deleting. Decisions identical by test,
-    # flagged conservatively per the r4 policy:
-    # round 12 flags for dd_delta_gate_indexed / dd_delta_gate_bucketed
-    # / stream_t6 superseded by the round-13 entries below where
-    # re-flagged.
+    # gate_input). Decisions identical by test, flagged conservatively
+    # per the r4 policy:
+    # round 12 flags for dd_delta_gate_indexed / stream_t6 superseded by
+    # the round-13 entries below where re-flagged.
     #
     # round 13 BUILD (ADVICE r12 items 1-2 + VERDICT r12 items 1/5):
     # the indexed gate's _open_dedup_index grew the lineage-stamp check
@@ -225,7 +223,6 @@ _PLAN_CHANGED: dict[str, int] = {
     "dd_bloom_gate": 13,
     "dd_contamination": 13,
     "dd_delta_gate": 13,
-    "dd_delta_gate_bucketed": 13,
     "dd_delta_gate_indexed": 13,
     "dd_exact_dedup": 13,
     "dd_minhash_lsh": 13,
@@ -286,6 +283,14 @@ _PLAN_CHANGED: dict[str, int] = {
 }
 
 
+# Queries deleted from the catalog whose green rows stay in the committed
+# CORRECTNESS_r*.json artifacts; the artifacts are history and not edited.
+# dd_delta_gate_bucketed: the bucketed storage shape lost its A/B
+# (SCALING.md round 11) and its oracle stays pinned by dd_delta_gate and
+# dd_delta_gate_indexed.
+_RETIRED: frozenset[str] = frozenset({"dd_delta_gate_bucketed"})
+
+
 def _latest_green_rounds() -> dict[str, int]:
     """name -> round of the latest green driver row, from the committed
     CORRECTNESS_r*.json artifacts at the repo root. Missing/unreadable
@@ -313,7 +318,8 @@ def _latest_green_rounds() -> dict[str, int]:
             continue
         for name, row in rows.items():
             if (
-                isinstance(row, dict)
+                name not in _RETIRED
+                and isinstance(row, dict)
                 and row.get("rows_match")
                 and row.get("schema_match")
                 and row.get("hash_match")

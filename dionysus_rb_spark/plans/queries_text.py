@@ -438,47 +438,6 @@ def dd_delta_gate_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).df
 
 
-@query(
-    "dd_delta_gate_bucketed",
-    refs="beyond:dedup",
-    # SAME oracle again: the bucketed-table index is a storage shape,
-    # not a semantic (like dd_delta_gate_indexed before it).
-    oracle=minhash.delta_dedup_gate_sql(
-        "doc_id % 4 = 0", "doc_id % 4 <> 0", k=3, threshold=0.5
-    ),
-)
-def dd_delta_gate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The delta gate's CLUSTER storage shape (VERDICT r10 item 3):
-    the corpus band rows live in a metastore table BUCKETED and sorted
-    on band_key, the shingle store in one bucketed on index_id
-    (minhash.build_dedup_index_bucketed), so both of the gate's joins
-    co-locate — the corpus side needs NO exchange at ANY delivery
-    size, covering the one regime where the plain-parquet index pays a
-    per-delivery corpus-side shuffle: a delivery too big for AQE to
-    broadcast. Byte-identical oracle to dd_delta_gate — bucketing
-    changes nothing about the admit/reject decision (also pinned, with
-    the co-location plan assertion, in test_dedup_properties). The
-    measured single-host A/B went to the parquet gate (SCALING.md
-    r11, 0.93x) — this shape is opt-in for network-bound clusters;
-    the catalog entry certifies its SEMANTICS."""
-    docs = _docs(spark, sf_dir)
-    minhash.build_dedup_index_bucketed(
-        docs.filter(F.col("doc_id") % 4 != 0),
-        "dd_gate_bkt",
-        "text",
-        "doc_id",
-        k=3,
-        n_buckets=8,
-    )
-    return minhash.delta_dedup_gate_bucketed(
-        docs.filter(F.col("doc_id") % 4 == 0),
-        "dd_gate_bkt",
-        "text",
-        "doc_id",
-        threshold=0.5,
-    ).df
-
-
 _NDG_B1 = "doc_id % 8 = 0"
 _NDG_B2 = "doc_id % 8 = 4"
 _NDG_IDX = "doc_id % 8 <> 0 AND doc_id % 8 <> 4"

@@ -908,150 +908,6 @@ def test_width_sidecar_cap_is_decision_identical_and_sheds_window(
     assert legacy == result(max_bucket=2, use_width_sidecars=False)
 
 
-def test_bucketed_index_gate_decision_identical_and_colocated(
-    spark, tmp_path
-):
-    """VERDICT r10 item 3: the bucketed-table index is a STORAGE shape,
-    not a semantic — gate decisions must equal the inline gate and the
-    parquet-index gate over the same corpus — and it must actually
-    co-locate: with broadcasts disabled (the big-delivery regime the
-    shape exists for), the bucketed gate's plan reads the bands/
-    shingles tables bucketed and carries strictly fewer shuffle
-    exchanges than the parquet gate's plan."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index,
-        build_dedup_index_bucketed,
-        delta_dedup_gate,
-        delta_dedup_gate_bucketed,
-        delta_dedup_gate_indexed,
-    )
-    from dionysus_rb_spark.tables import load_table
-
-    from conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    delta = docs.filter(F.col("doc_id") % 4 == 0)
-    index = docs.filter(F.col("doc_id") % 4 != 0)
-    prefix = "t_bkt_gate"
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=8)
-    pq_idx = str(tmp_path / "pq_idx")
-    build_dedup_index(index, pq_idx, k=3)
-
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5) as d:
-        inline = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == inline
-    # cap engaged hard: still identical to the inline window semantics
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5, max_bucket=1) as d:
-        inline_cap = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5, max_bucket=1) as d:
-        assert sorted(map(tuple, d.collect())) == inline_cap
-
-    def exchanges(decision) -> tuple[int, str]:
-        decision.collect()
-        plan = decision.df._jdf.queryExecution().executedPlan().toString()
-        return (
-            len(
-                re.findall(
-                    r"Exchange (?:hashpartitioning|rangepartitioning|"
-                    r"SinglePartition)",
-                    plan,
-                )
-            ),
-            plan,
-        )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-            n_bkt, plan_bkt = exchanges(d)
-        with delta_dedup_gate_indexed(delta, pq_idx, threshold=0.5) as d:
-            n_pq, _ = exchanges(d)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in plan_bkt, "bands/shingles scans must bucket"
-    assert n_bkt < n_pq, (
-        f"bucketed gate must co-locate (got {n_bkt} exchanges vs "
-        f"parquet {n_pq})"
-    )
-
-
-def test_bucketed_build_rejects_qualified_prefix(spark):
-    """ADVICE r11 item 4a: the prefix names warehouse DIRECTORIES, so a
-    db-qualified (or otherwise non-identifier) prefix would desync the
-    catalog drop from the directory cleanup — rejected up front."""
-    import pytest
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index_bucketed,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "some words here")], "doc_id long, text string"
-    )
-    for bad in ("db.prefix", "", "pfx-dash", "pfx/slash"):
-        with pytest.raises(ValueError, match="unqualified identifier"):
-            build_dedup_index_bucketed(docs, bad, k=3, n_buckets=2)
-
-
-def test_bucketed_build_spares_custom_location_table_data(spark, tmp_path):
-    """ADVICE r11 item 4b: a pre-existing CUSTOM-LOCATION table that
-    happens to share a target name is dropped from the catalog (the
-    name must be free for the rebuild) but its data directory is NOT
-    deleted — the old unconditional warehouse-path delete could destroy
-    unrelated data. The rebuild still lands a working index."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index_bucketed,
-        delta_dedup_gate,
-        delta_dedup_gate_bucketed,
-    )
-
-    prefix = "t_bkt_custloc"
-    custom = str(tmp_path / "precious_external_data")
-    spark.sql(f"DROP TABLE IF EXISTS {prefix}_bands")
-    spark.createDataFrame([(1,)], "x int").write.option(
-        "path", custom
-    ).saveAsTable(f"{prefix}_bands")
-    assert os.path.isdir(custom)
-
-    index = spark.createDataFrame(
-        [
-            (1, "alpha0 beta1 gamma2 delta3 epsilon4 zeta5 eta6 theta7"),
-            (2, "unrelated corpus filler text sharing nothing at all"),
-        ],
-        "doc_id long, text string",
-    )
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=2)
-    assert os.path.isdir(custom) and any(
-        n.endswith(".parquet") for n in os.listdir(custom)
-    ), "custom-location table data must survive the rebuild"
-
-    delta = spark.createDataFrame(
-        [(10, "alpha0 beta1 gamma2 delta3 epsilon4 zeta5 eta6 theta7")],
-        "doc_id long, text string",
-    )
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5) as d:
-        want = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == want
-    # second rebuild over its own managed tables still works (the
-    # managed-path delete path)
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=2)
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == want
-    for suffix in ("_bands", "_shingles", "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}{suffix}")
-
-
 def test_segment_tag_exclusion_is_exact_not_suffix(spark, tmp_path):
     """Tags may contain '-', so segment e1-append-x-append-b ends with
     '-append-b': a suffix-based exclude_segment_tag='b' (or

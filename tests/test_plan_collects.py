@@ -26,14 +26,7 @@ Current sites, audited bounded:
   (_pruned_shingles) -- gated by a count() check against
   PRUNE_MAX_IDS before the collect runs, never bounded by corpus or
   delivery size; wider candidate sets fall back to the full-scan
-  join without collecting; plus the bucketed gate's signature-constant
-  read (delta_dedup_gate_bucketed) -- the <prefix>_meta table is one
-  row by construction and the collect raises unless exactly one row
-  comes back; plus the bucketed BUILD's catalog-location probe
-  (build_dedup_index_bucketed, r12) -- DESCRIBE TABLE EXTENDED output
-  is metadata rows (fixed small count per table), collected once per
-  rebuild to resolve the dropped table's location so only the
-  default-managed directory is ever deleted (ADVICE r11 item 4)
+  join without collecting
 
 (operators/graph.py's former one-scalar collect now rides the eager
 checkpoint as an observed metric -- zero collects in the CC loop.)
@@ -52,7 +45,7 @@ AUDITED_SITES = {
     "operators/pq.py": 7,
     "operators/similarity.py": 1,
     "operators/clustering.py": 2,
-    "operators/minhash.py": 3,
+    "operators/minhash.py": 1,
 }
 
 COLLECT = re.compile(r"\.collect\(\)")

@@ -516,6 +516,35 @@ def test_j4_child_store_without_canceled_column(spark, tmp_path, kind):
     assert {k: r["val"] for k, r in _rows(spark, store).items()} == {11: "a2", 21: "c"}
 
 
+def test_merge_batch_without_a_stored_column(spark, tmp_path):
+    """A batch that lacks a column the store holds merges: a matched row
+    keeps its stored value (here its canceled stamp), and a new key
+    inserts NULL, as the reference assigns only the payload's
+    attributes."""
+    from datetime import datetime
+
+    store = SnapshotStore(str(tmp_path / "children"))
+    cols = "synced_id LONG, synced_updated_at TIMESTAMP, val STRING"
+    t1, t2 = datetime(2024, 1, 1), datetime(2024, 1, 2)
+    store.overwrite(
+        spark.createDataFrame(
+            [(1, t1, "a", t1), (2, t1, "b", None)],
+            cols + ", synced_canceled_at TIMESTAMP",
+        )
+    )
+    store.merge(
+        spark,
+        spark.createDataFrame(
+            [(1, t2, "a2", "updated"), (3, t2, "c", "created")],
+            cols + ", event STRING",
+        ),
+    )
+    got = {
+        k: (r["val"], r["synced_canceled_at"]) for k, r in _rows(spark, store).items()
+    }
+    assert got == {1: ("a2", t1), 2: ("b", None), 3: ("c", None)}
+
+
 @pytest.mark.parametrize("seeded", [False, True], ids=["empty", "seeded"])
 @pytest.mark.parametrize("kind", sorted(STORES))
 def test_first_merge_takes_the_guarded_path(spark, tmp_path, kind, seeded):
